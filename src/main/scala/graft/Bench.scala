@@ -36,6 +36,32 @@ import org.apache.spark.sql.SparkSession
   * entry in `errors` — a failure must not read as a fast success.
   */
 object Bench {
+  /** Host-state canary (r15 verdict task #6): a FIXED CPU+shuffle
+    * microbenchmark — same JVM, zero parquet, data synthesized from
+    * spark.range — so round-over-round drift in the fleet numbers is
+    * separable from plan regressions (r15's 1.35× fleet-wide warm
+    * regression was environmental, but nothing in the artifact proved
+    * it). Shape: 20 M rows hashed (md5 → CPU/string kernels) and shuffled
+    * into a 100 k-key agg (exchange + sort + agg kernels). min-of-3 after
+    * the caller's warm-ups, so JIT is already paid; the min rejects load
+    * spikes the same way the pass structure does. Judge protocol:
+    * normalize per-query times by canary_sec ratio before calling a
+    * regression. Shared with [[JobProbe]]. */
+  def canary(spark: SparkSession): Double = {
+    def canaryOnce(): Double = {
+      val t0 = System.nanoTime()
+      spark.range(0, 20000000L, 1, 32)
+        .selectExpr("id % 100000 AS k",
+          "conv(substring(md5(cast(id AS string)), 1, 8), 16, 10) AS v")
+        .groupBy("k")
+        .agg(org.apache.spark.sql.functions.sum("v").as("sv"),
+             org.apache.spark.sql.functions.count("*").as("c"))
+        .write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    (1 to 3).map(_ => canaryOnce()).min
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -72,28 +98,7 @@ object Bench {
       .selectExpr("conv(substring(h, 1, 8), 16, 10) AS x", "size(t) AS n",
         "transform(t, v -> concat(v, 'x')) AS tt"))
 
-    // Host-state canary (r15 verdict task #6): a FIXED CPU+shuffle
-    // microbenchmark — same JVM, zero parquet, data synthesized from
-    // spark.range — so round-over-round drift in the fleet numbers is
-    // separable from plan regressions (r15's 1.35× fleet-wide warm
-    // regression was environmental, but nothing in the artifact proved
-    // it). Shape: 20 M rows hashed (md5 → CPU/string kernels) and shuffled
-    // into a 100 k-key agg (exchange + sort + agg kernels). min-of-3 after
-    // the warm-ups above, so JIT is already paid; the min rejects load
-    // spikes the same way the pass structure does. Judge protocol:
-    // normalize per-query times by canary_sec ratio before calling a
-    // regression.
-    def canaryOnce(): Double = {
-      val t0 = System.nanoTime()
-      noop(spark.range(0, 20000000L, 1, 32)
-        .selectExpr("id % 100000 AS k",
-          "conv(substring(md5(cast(id AS string)), 1, 8), 16, 10) AS v")
-        .groupBy("k")
-        .agg(org.apache.spark.sql.functions.sum("v").as("sv"),
-             org.apache.spark.sql.functions.count("*").as("c")))
-      (System.nanoTime() - t0) / 1e9
-    }
-    val canarySec = (1 to 3).map(_ => canaryOnce()).min
+    val canarySec = canary(spark)
 
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     // DETERMINISTIC run order (r12 advice #5): Map hash order reshuffles

@@ -3,10 +3,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Dev utility (like [[Explain]]/[[SccCompare]]): run one or more
+/** Dev utility (like [[Explain]]): run one or more
   * SparkEntry queries with a listener counting Spark jobs, stages and
   * tasks — the profile that separates "fixed job latency × round count"
   * from data volume for the iterative gates (guide §1: measure first).
+  * Prints the [[Bench.canary]] host canary first, so two probes taken at
+  * different times can be compared at equal host state.
   * Usage: runMain graft.JobProbe <sfDir> <name> [name...]
   */
 object JobProbe {
@@ -43,6 +45,7 @@ object JobProbe {
     Seq("orders", "lineitem", "documents", "embeddings").foreach { t =>
       try noop(spark.read.parquet(s"$sfDir/$t.parquet")) catch { case _: Throwable => }
     }
+    println(f"JOBPROBE canary ${Bench.canary(spark)}%.2f s")
     names.foreach { n =>
       (1 to 2).foreach { pass =>
         spark.catalog.clearCache()

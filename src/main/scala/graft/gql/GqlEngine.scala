@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 
 import Ast._
 import graft.functions.VectorExprs
+import graft.graph.Superstep
 
 /** GQL statement executor — the Spark lifecycle target of SURVEY.md §3.1:
   * GQL text → [[Parser]] AST → DataFrame programs against a
@@ -804,9 +805,8 @@ class GqlEngine(spark: SparkSession, root: String,
       case "->" => fwd
       case "<-" => rev
       case _ => fwd.unionByName(rev)
-    }).withColumn("skey", coalesce(col("src_s"), col("src_i").cast("string")))
-      .withColumn("dkey", coalesce(col("dst_s"), col("dst_i").cast("string")))
-      .select("skey", "dkey", "ecost")
+    }).select(coalesce(col("src_s"), col("src_i").cast("string")).as("src"),
+      coalesce(col("dst_s"), col("dst_i").cast("string")).as("dst"), col("ecost"))
       .localCheckpoint()
     def keyStr(v: GVal): String = v match {
       case GInt(l) => l.toString
@@ -815,18 +815,12 @@ class GqlEngine(spark: SparkSession, root: String,
     }
     val spark = edges.sparkSession
     import org.apache.spark.sql.functions.{min => fmin}
-    var dist = spark.range(1).select(
+    val init = spark.range(1).select(
       lit(keyStr(mp.from)).as("node"), lit(0.0).as("cost"), lit(0).as("hops"))
-    for (_ <- 1 to rounds) {
-      val relaxed = dist.join(rel, col("node") === col("skey"))
-        .select(col("dkey").as("node"), (col("cost") + col("ecost")).as("cost"),
-          (col("hops") + 1).as("hops"))
-      dist = dist.unionByName(relaxed)
-        .groupBy(col("node"))
-        .agg(fmin(struct(col("cost"), col("hops"))).as("best"))
-        .select(col("node"), col("best.cost").as("cost"), col("best.hops").as("hops"))
-        .localCheckpoint() // lineage truncation — see GraphOps.qBfs
-    }
+    // ties on cost go to the fewer-hop path
+    val dist = Superstep.relax(rel, init, rounds, _.groupBy(col("node"))
+      .agg(fmin(struct(col("cost"), col("hops"))).as("best"))
+      .select(col("node"), col("best.cost").as("cost"), col("best.hops").as("hops")))
     val hit = dist.filter(col("node") === keyStr(mp.to))
     spark.range(1).select(lit(keyStr(mp.from)).as("from"), lit(keyStr(mp.to)).as("to"))
       .join(hit.select(col("cost"), col("hops")), lit(true), "left")
@@ -836,35 +830,27 @@ class GqlEngine(spark: SparkSession, root: String,
     * expanded to `hops` orders (frontier join per hop, origin and already-
     * reached nodes excluded). */
   private def neighborQuery(edges: DataFrame, n: Neighbor): DataFrame = {
-    // normalized (skey -> dkey) relation honoring the pattern direction
+    // normalized (src -> dst) relation honoring the pattern direction
     val fwd = edges.select(col("src_i"), col("src_s"), col("dst_i"), col("dst_s"), col("directed"))
     def norm(df: DataFrame) = df
-      .withColumn("skey", coalesce(col("src_s"), col("src_i").cast("string")))
-      .withColumn("dkey", coalesce(col("dst_s"), col("dst_i").cast("string")))
-      .select("skey", "dkey")
+      .select(coalesce(col("src_s"), col("src_i").cast("string")).as("src"),
+        coalesce(col("dst_s"), col("dst_i").cast("string")).as("dst"))
     val rel = (n.dir match {
       case "->" => norm(fwd.filter(col("directed")))
       case "<-" => norm(fwd.filter(col("directed"))).select(
-        col("dkey").as("skey"), col("skey").as("dkey"))
+        col("dst").as("src"), col("src").as("dst"))
       case _ => norm(fwd).unionByName(
-        norm(fwd).select(col("dkey").as("skey"), col("skey").as("dkey")))
-    }).filter(col("dkey").isNotNull).localCheckpoint()
+        norm(fwd).select(col("dst").as("src"), col("src").as("dst")))
+    }).filter(col("dst").isNotNull).localCheckpoint()
     val origin = n.key match {
       case GInt(l) => l.toString
       case GStr(s) => s
       case other => throw new IllegalArgumentException(s"bad neighbor key $other")
     }
     val spark = edges.sparkSession
-    var reached = spark.range(1).select(lit(origin).as("node"))
-    var frontier = reached
-    for (_ <- 1 to math.max(1, n.hops)) {
-      frontier = frontier.join(rel, col("node") === col("skey"))
-        .select(col("dkey").as("node"))
-        .join(reached, Seq("node"), "left_anti")
-        .distinct()
-        .localCheckpoint()
-      reached = reached.unionByName(frontier).distinct().localCheckpoint()
-    }
+    import spark.implicits._
+    val reached = Superstep.reached(
+      Superstep.frontiers(rel, Seq(origin).toDF("node"), math.max(1, n.hops)))
     // neighbors keep the original twin-column shape for downstream callers
     val keys = edges
       .select(coalesce(col("src_s"), col("src_i").cast("string")).as("node"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Fns
+import graft.graph.Superstep
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -72,29 +73,14 @@ object BigGraphOps {
     r.getLong(0)
   }
 
-  /** E6 at scale — min-hop BFS from the start vertex, BFS_HOPS supersteps.
-    * Each round: one hash join frontier⋈edges on node id, anti-join dedupe
-    * against everything reached, distinct. Only the NEW frontier is
-    * localCheckpoint'ed each round — `reached` stays a flat union of the
-    * ≤BFS_HOPS checkpointed frontiers, so per-round materialization is
-    * O(frontier), not O(all reached so far), and the lineage still never
-    * compounds (every union leaf is a checkpoint). */
+  /** E6 at scale — min-hop BFS from the start vertex, BFS_HOPS supersteps
+    * of [[Superstep.frontiers]]: one hash join frontier⋈edges on node id
+    * per round, distinct, anti-join dedupe against everything reached. */
   val qBfsBig: Q = (s, d) => {
+    import s.implicits._
     val edges = persisted(coEdges(s, d).select(col("src"), col("dst")))
-    val start = startNode(edges)
-    var frontier = s.range(1)
-      .select(lit(start).as("node"), lit(0).as("hop")).localCheckpoint()
-    var reached = frontier
-    for (h <- 1 to BFS_HOPS) {
-      frontier = frontier
-        .join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), lit(h).as("hop"))
-        .join(reached.select("node"), Seq("node"), "left_anti")
-        .distinct()
-        .localCheckpoint()
-      reached = reached.unionByName(frontier)
-    }
-    reached.groupBy(col("node")).agg(min(col("hop")).as("hops")).orderBy("node")
+    Superstep.reached(Superstep.frontiers(edges, Seq(startNode(edges)).toDF("node"), BFS_HOPS))
+      .select(col("node"), col("hop").as("hops")).orderBy("node")
   }
 
   /** E4 at scale — bounded Bellman-Ford with integer edge weights:
@@ -104,45 +90,34 @@ object BigGraphOps {
   val qSsspBig: Q = (s, d) => {
     val edges = persisted(
       coEdges(s, d).select(col("src"), col("dst"), col("w").as("ecost")))
-    val start = startNode(edges)
-    var dist = s.range(1).select(lit(start).as("node"), lit(0L).as("cost"))
-    for (_ <- 1 to SSSP_ROUNDS) {
-      val relaxed = dist.join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), (col("cost") + col("ecost")).as("cost"))
-      dist = dist.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("cost")).as("cost"))
-        .localCheckpoint() // dist referenced 2x/round — see GraphOps.qBfs
-    }
-    dist.orderBy("node")
+    val init = s.range(1).select(lit(startNode(edges)).as("node"), lit(0L).as("cost"))
+    Superstep.relax(edges, init, SSSP_ROUNDS, Superstep.minCost).orderBy("node")
   }
 
   /** E11 at scale — PageRank, PR_ITERS synchronous iterations, damping
     * 0.85, over the full vertex set (N from the data, not a constant).
     * Contributions decimal-summed so the shuffle order can't perturb the
     * ranks; each iteration is one join + one aggregation partitioned on
-    * node id. */
+    * node id ([[GraphOps.powerRanks]]). */
   val qPagerankBig: Q = (s, d) => {
+    val (nodes, edges) = degreeEdges(s, d)
+    val n = nodes.count().toDouble
+    val init = nodes.select(col("node"), lit(1.0 / n).as("rank"))
+    val rank = GraphOps.powerRanks(nodes, edges, init, PR_ITERS) { in =>
+      lit(0.15 / n) + lit(0.85) * in
+    }
+    rank.select(col("node"), Fns.roundP(col("rank"), 8).as("pagerank")).orderBy("node")
+  }
+
+  /** The persisted vertex set and the persisted out-degree-weighted edges
+    * (src, dst, deg) that [[qPagerankBig]] and [[qPpr]] iterate over. */
+  private def degreeEdges(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val edges = persisted(coEdges(s, d).select(col("src"), col("dst")))
     val nodes = persisted(
       edges.select(col("src").as("node"))
         .unionByName(edges.select(col("dst").as("node")))
         .distinct())
-    val n = nodes.count().toDouble
-    val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    var rank = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-    for (_ <- 1 to PR_ITERS) {
-      val contrib = rank.join(edges, col("node") === col("src"))
-        .join(outDeg, "src")
-        .select(col("dst"), (col("rank") / col("deg")).as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c").cast("decimal(28,18)")).cast("double").as("in_sum"))
-      rank = nodes
-        .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(0.15 / n) + lit(0.85) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-        .localCheckpoint() // linear chain, but keeps each round's plan flat
-    }
-    rank.select(col("node"), Fns.roundP(col("rank"), 8).as("pagerank")).orderBy("node")
+    (nodes, persisted(edges.withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))))
   }
 
   /** Personalized PageRank restart mass (the standard 0.15, all of it
@@ -166,29 +141,14 @@ object BigGraphOps {
     * IEEE divisions on identical doubles, sums pass through
     * decimal(28,18) so aggregation order cannot perturb them, and the
     * gate pins roundP-8 values. Scale shape: identical to PageRank —
-    * node-keyed join + agg per round, localCheckpoint'ed. */
+    * node-keyed join + agg per round ([[GraphOps.powerRanks]]). */
   val qPpr: Q = (s, d) => {
-    val edges = persisted(coEdges(s, d).select(col("src"), col("dst")))
-    val nodes = persisted(
-      edges.select(col("src").as("node"))
-        .unionByName(edges.select(col("dst").as("node")))
-        .distinct())
+    val (nodes, edges) = degreeEdges(s, d)
     val seed = startNode(edges)
-    val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    var rank = nodes.select(col("node"),
-      when(col("node") === seed, lit(1.0)).otherwise(lit(0.0)).as("rank"))
-    for (_ <- 1 to PR_ITERS) {
-      val contrib = rank.join(edges, col("node") === col("src"))
-        .join(outDeg, "src")
-        .select(col("dst"), (col("rank") / col("deg")).as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c").cast("decimal(28,18)")).cast("double").as("in_sum"))
-      rank = nodes
-        .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (when(col("node") === seed, lit(PPR_ALPHA)).otherwise(lit(0.0)) +
-            lit(1.0 - PPR_ALPHA) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-        .localCheckpoint()
+    val atSeed = (v: Double) => when(col("node") === seed, lit(v)).otherwise(lit(0.0))
+    val init = nodes.select(col("node"), atSeed(1.0).as("rank"))
+    val rank = GraphOps.powerRanks(nodes, edges, init, PR_ITERS) { in =>
+      atSeed(PPR_ALPHA) + lit(1.0 - PPR_ALPHA) * in
     }
     rank.filter(col("rank") > 0.0)
       .select(col("node"), Fns.roundP(col("rank"), 8).as("ppr"))
@@ -598,69 +558,6 @@ object BigGraphOps {
   val qWccBig: Q = (s, d) =>
     ccTwoPhase(sccEdges(s, d)).orderBy("node")
 
-  /** DataFrame-superstep SCC (Orzan coloring — the same algorithm GraphX's
-    * Pregel SCC runs): outer rounds of (forward min-color propagation to
-    * fixpoint) → (roots = color==self) → (backward confirmation inside the
-    * color) → remove confirmed SCCs; vertices left when the edge set
-    * drains are singletons. Built to ANSWER the r10 verdict's "evaluate
-    * retiring the GraphX RDD path for q_scc_big" — a measured comparison,
-    * not a guess (SccCompare + PERF.md row, SccDfSpec parity vs the gate).
-    * Every inner fixpoint is count-probed on localCheckpoint'ed frames
-    * (the iterative-loop rule); supersteps are node-keyed joins like
-    * every DF graph gate here, so the comparison isolates exactly the
-    * per-superstep cost difference between the two execution paths. */
-  private[graft] def dfScc(edges0: DataFrame, maxRounds: Int = SCC_ITERS): DataFrame = {
-    val sess = edges0.sparkSession
-    var edges = edges0.select(col("src"), col("dst")).distinct().localCheckpoint()
-    var verts = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
-    var confirmed: DataFrame =
-      sess.emptyDataFrame.select(lit(0L).as("node"), lit(0L).as("scc_id")).limit(0)
-    var round = 0
-    while (round < maxRounds && edges.count() > 0) {
-      // forward min-color propagation to fixpoint
-      var color = verts.select(col("node"), col("node").as("color")).localCheckpoint()
-      var changed = 1L
-      while (changed > 0) {
-        val prop = color.join(edges, col("node") === col("src"))
-          .groupBy(col("dst").as("n")).agg(min(col("color")).as("pc"))
-        val nc = color.join(prop, col("node") === col("n"), "left")
-          .select(col("node"),
-            least(col("color"), coalesce(col("pc"), col("color"))).as("color"))
-          .localCheckpoint()
-        changed = nc.join(color.withColumnRenamed("color", "old"), "node")
-          .filter(col("color") =!= col("old")).count()
-        color = nc
-      }
-      // backward confirmation: from each root r, walk edges in reverse
-      // while staying inside color r — the reached set IS SCC(r)
-      var conf = color.filter(col("color") === col("node"))
-        .select(col("node"), col("node").as("scc_id")).localCheckpoint()
-      var grew = 1L
-      while (grew > 0) {
-        val step = edges.join(conf, col("dst") === col("node"))
-          .select(col("src").as("node"), col("scc_id"))
-          .join(color, "node")
-          .filter(col("color") === col("scc_id"))
-          .select(col("node"), col("scc_id"))
-        val next = conf.unionByName(step).distinct().localCheckpoint()
-        grew = next.count() - conf.count()
-        conf = next
-      }
-      confirmed = confirmed.unionByName(conf)
-      verts = verts.join(conf.select(col("node")), Seq("node"), "left_anti")
-        .localCheckpoint()
-      edges = edges
-        .join(verts.select(col("node").as("src")), Seq("src"))
-        .join(verts.select(col("node").as("dst")), Seq("dst"))
-        .select(col("src"), col("dst")).localCheckpoint()
-      round += 1
-    }
-    // drained graph: every remaining vertex is its own singleton SCC
-    confirmed.unionByName(verts.select(col("node"), col("node").as("scc_id")))
-  }
-
   /** Triangle counting + global closure at data scale — the motif gate
     * (E3's kin) on the co-purchase graph: the edge set is already
     * ORDERED (dst > src by construction), so a triangle is a < b < c
@@ -869,9 +766,9 @@ object BigGraphOps {
     *
     * Scale shape: the BFS state is pivots×nodes (pivots is a constant),
     * one (pivot, node)-keyed hash join + anti-join dedupe per superstep
-    * — [[qBfsBig]]'s dataflow with a pivot key rode along; only the new
-    * frontier is localCheckpoint'ed per round. The pivot list is a
-    * CENT_PIVOTS-row collect (the startNode scalar precedent). */
+    * — [[qBfsBig]]'s dataflow with a pivot key riding along
+    * ([[Superstep.frontiers]]). The pivot list is a CENT_PIVOTS-row
+    * collect (the startNode scalar precedent). */
   val qHarmonicBig: Q = (s, d) => {
     val e = coEdges(s, d)
     val und = persisted(
@@ -882,19 +779,9 @@ object BigGraphOps {
       .collect().map(_.getLong(0)).toSeq
     require(pivots.nonEmpty, "co-purchase graph has no nodes")
     import s.implicits._
-    var frontier = pivots.toDF("pivot")
-      .select(col("pivot"), col("pivot").as("node"), lit(0).as("hop"))
-      .localCheckpoint()
-    var reached = frontier
-    for (h <- 1 to CENT_HOPS) {
-      frontier = frontier
-        .join(und, col("node") === col("a"))
-        .select(col("pivot"), col("b").as("node"), lit(h).as("hop"))
-        .join(reached.select("pivot", "node"), Seq("pivot", "node"), "left_anti")
-        .distinct()
-        .localCheckpoint()
-      reached = reached.unionByName(frontier)
-    }
+    val seeds = pivots.toDF("pivot").select(col("pivot"), col("pivot").as("node"))
+    val reached = Superstep.reached(Superstep.frontiers(
+      und.select(col("a").as("src"), col("b").as("dst")), seeds, CENT_HOPS))
     reached.filter(col("hop") > 0)
       .groupBy("node")
       .agg(count(lit(1)).as("n_reached"),
@@ -967,46 +854,9 @@ object BigGraphOps {
     * 3k-row frontiers, and restructuring the round from two shuffles to
     * one moved nothing), so the hop budget IS the query's price — 8
     * keeps the bound useful while the 2×H rounds stay ~60% of the r10
-    * 12-hop cost. On a real cluster the per-round floor amortizes over
-    * partitions and H would be raised, not the dataflow changed —
-    * env-overridable (SPARK_GRAFT_DS_HOPS) so a cluster run restores the
-    * deeper sweep without a code change; the oracle SQL interpolates the
-    * same val, so both engines always share the bound. */
-  val DS_HOPS = sys.env.getOrElse("SPARK_GRAFT_DS_HOPS", "8").toInt
-
-  /** Hop-bounded multi-round BFS over an undirected edge frame (a, b):
-    * min-hop distances from `start`, [[DS_HOPS]] supersteps of
-    * frontier⋈edges + anti-join dedupe ([[qBfsBig]]'s dataflow, reused
-    * for both sweeps). This shape was re-adjudicated in r16 after the
-    * q_diameter warm-time flag: the gate is overhead-dominated (tiny
-    * frontiers × ~0.3 s fixed per-job latency, data-volume-free), and
-    * three restructures all measured AT-OR-WORSE same-host (fused
-    * min-flag agg replacing distinct+anti 6.1 s vs 5.4–6.0 s baseline;
-    * frontier-drain early exit 5.7 s — at shipped SFs ecc hits the hop
-    * CAP so zero rounds drain and the per-round isEmpty probe is pure
-    * added latency; AQE-off 6.5 s). The r14→r15 2× was host drift, not
-    * plan — see PERF.md r16 and the bench canary. */
-  private def undBfs(s: SparkSession, und: DataFrame, start: Long): DataFrame = {
-    var frontier = s.range(1)
-      .select(lit(start).as("node"), lit(0).as("hop")).localCheckpoint()
-    var reached = frontier
-    for (h <- 1 to DS_HOPS) {
-      // Broadcast the frontier into the expansion join — a single-source
-      // BFS frontier is ≪ the edge set at any scale (the standard Pregel
-      // small-frontier path; AQE would pick this dynamically, pinning it
-      // saves the exchange stage every round). distinct BEFORE the
-      // anti-join so both run on the same node-keyed exchange and the
-      // anti probe sees each candidate once.
-      frontier = und
-        .join(broadcast(frontier.select(col("node"))), col("a") === col("node"))
-        .select(col("b").as("node")).distinct()
-        .join(reached.select("node"), Seq("node"), "left_anti")
-        .select(col("node"), lit(h).as("hop"))
-        .localCheckpoint()
-      reached = reached.unionByName(frontier)
-    }
-    reached.groupBy(col("node")).agg(min(col("hop")).as("hop"))
-  }
+    * 12-hop cost. The oracle SQL interpolates the same val, so both
+    * engines always share the bound. */
+  val DS_HOPS = 8
 
   /** Double-sweep diameter lower bound (Magnien, Latapy & Habib, JEA
     * 2009 — the standard cheap diameter estimator: BFS from an arbitrary
@@ -1020,20 +870,31 @@ object BigGraphOps {
     * MINIMUM node id so the whole report is deterministic. Output is
     * one row: start, both peripheral vertices, both eccentricities.
     *
-    * Scale shape: 2×DS_HOPS frontier joins keyed on node id; the only
-    * driver round-trips are the two 1-row argmax picks. */
+    * Scale shape: 2×DS_HOPS rounds of [[Superstep.frontiers]] over the
+    * undirected edges; the only driver round-trips are the two 1-row
+    * argmax picks. The gate is overhead-dominated (tiny frontiers ×
+    * ~0.3 s fixed per-job latency, data-volume-free): in r16 a fused
+    * min-flag agg, a frontier-drain early exit (at shipped SFs ecc hits
+    * the hop cap, so the per-round emptiness probe is pure added latency)
+    * and AQE-off all measured at-or-worse than the plain frontier round —
+    * see PERF.md r16. */
   val qDiameter: Q = (s, d) => {
+    import s.implicits._
     val e = coEdges(s, d).select("src", "dst")
+    // the (a, b) frame qAssortativity and qLinkPredict persist too, so a
+    // bench pass builds it once
     val und = persisted(
       e.select(col("src").as("a"), col("dst").as("b"))
         .unionByName(e.select(col("dst").as("a"), col("src").as("b"))))
-    val start = startNode(e.select(col("src"), col("dst")))
-    def farthest(dists: DataFrame): (Long, Int) = {
-      val r = dists.orderBy(desc("hop"), col("node")).limit(1).head()
+    val start = startNode(e)
+    def farthest(from: Long): (Long, Int) = {
+      val r = Superstep.reached(Superstep.frontiers(
+          und.select(col("a").as("src"), col("b").as("dst")), Seq(from).toDF("node"), DS_HOPS))
+        .orderBy(desc("hop"), col("node")).limit(1).head()
       (r.getLong(0), r.getInt(1))
     }
-    val (far1, ecc1) = farthest(undBfs(s, und, start))
-    val (far2, ecc2) = farthest(undBfs(s, und, far1))
+    val (far1, ecc1) = farthest(start)
+    val (far2, ecc2) = farthest(far1)
     s.range(1).select(
       lit(start).as("start"), lit(far1).as("far1"), lit(ecc1).as("ecc1"),
       lit(far2).as("far2"), lit(ecc2).as("diameter_lb"))
@@ -1089,8 +950,8 @@ object BigGraphOps {
     * spectral normalization would gate on libm, the walk-count semantics
     * gate on arithmetic. The truncated form is also the scale-correct
     * one: full spectral Katz needs a solve, while the truncated index is
-    * KATZ_ITERS node-keyed join+agg supersteps over the edge set —
-    * PageRank's exact dataflow shape (localCheckpoint per round, edges
+    * KATZ_ITERS node-keyed push-sum supersteps over the edge set —
+    * PageRank's exact dataflow shape ([[Superstep.pushSum]], edges
     * persisted once). Reference kin: E11 degrees
     * (/root/reference/src/operand/analysis/DegreeCentrality.cpp) — Katz
     * is degree's walk-depth generalization (k=1 IS in-degree+1). */
@@ -1100,18 +961,12 @@ object BigGraphOps {
       edges.select(col("src").as("node"))
         .unionByName(edges.select(col("dst").as("node")))
         .distinct())
-    var x = nodes.select(col("node"), lit(1L).cast("decimal(38,0)").as("score"))
-    for (_ <- 1 to KATZ_ITERS) {
-      val in = x.join(edges, col("node") === col("src"))
-        .groupBy(col("dst"))
-        .agg(sum(col("score")).as("in_sum"))
-      x = nodes
-        .join(in, col("node") === col("dst"), "left")
+    val one = lit(1L).cast("decimal(38,0)")
+    val x = Superstep.iterate(nodes.select(col("node"), one.as("score")), KATZ_ITERS) { (x, _) =>
+      Superstep.pushSum(nodes, x, edges, col("score"))
         .select(col("node"),
-          (lit(1L).cast("decimal(38,0)") +
-            coalesce(col("in_sum"), lit(0L).cast("decimal(38,0)"))).as("score"))
-        .localCheckpoint() // linear chain; keeps each round's plan flat
-    }
+          (one + coalesce(col("in_sum"), lit(0L).cast("decimal(38,0)"))).as("score"))
+    }.last
     x.select(col("node"), col("score").cast("long").as("katz")).orderBy("node")
   }
 
@@ -1138,20 +993,19 @@ object BigGraphOps {
         .unionByName(edges.select(col("dst").as("node")))
         .distinct())
     val zero = lit(0L).cast("decimal(38,0)")
-    var hub = nodes.select(col("node"), lit(1L).cast("decimal(38,0)").as("h"))
-    var auth = nodes.select(col("node"), zero.as("a"))
-    for (_ <- 1 to HITS_ITERS) {
-      val aIn = hub.join(edges, col("node") === col("src"))
-        .groupBy(col("dst")).agg(sum(col("h")).as("in_sum"))
-      auth = nodes.join(aIn, col("node") === col("dst"), "left")
-        .select(col("node"), coalesce(col("in_sum"), zero).as("a"))
-        .localCheckpoint()
-      val hOut = auth.join(edges, col("node") === col("dst"))
-        .groupBy(col("src")).agg(sum(col("a")).as("out_sum"))
-      hub = nodes.join(hOut, col("node") === col("src"), "left")
-        .select(col("node"), coalesce(col("out_sum"), zero).as("h"))
-        .localCheckpoint()
+    val rev = edges.select(col("dst").as("src"), col("src").as("dst"))
+    // half-rounds alternate: odd ones push hub mass down the edges into
+    // authorities, even ones push authority mass back up into hubs
+    val halves = Superstep.iterate(
+        nodes.select(col("node"), lit(1L).cast("decimal(38,0)").as("h")), 2 * HITS_ITERS) {
+      case (hub, r) if r % 2 == 1 =>
+        Superstep.pushSum(nodes, hub, edges, col("h"))
+          .select(col("node"), coalesce(col("in_sum"), zero).as("a"))
+      case (auth, _) =>
+        Superstep.pushSum(nodes, auth, rev, col("a"))
+          .select(col("node"), coalesce(col("in_sum"), zero).as("h"))
     }
+    val Seq(auth, hub) = halves.takeRight(2)
     auth.join(hub, Seq("node"))
       .select(col("node"), col("h").cast("long").as("hub"),
         col("a").cast("long").as("auth"))
@@ -1174,12 +1028,12 @@ object BigGraphOps {
     * O(V·E) — unrunnable at 100 TB; fixing roots and horizon makes each
     * phase K·E-bounded per superstep, the standard estimator trade.
     *
-    * Plan/scale: forward = [[BC_HOPS]] rounds of frontier⋈edges hash
-    * join + (root,node)-keyed count-sum with anti-join dedupe (exact
-    * longs); backward = one join + agg per level. Only frontiers/levels
-    * are localCheckpoint'ed (the PERF.md iterative-loop rule); edges
-    * persist once. Exactness: σ is all-integer; every δ and the final
-    * per-node sum aggregate decimal(28,18)-cast terms, so aggregation
+    * Plan/scale: forward = [[BC_HOPS]] rounds of [[Superstep.frontiers]]
+    * carrying σ — frontier⋈edges hash join + (root,node)-keyed count-sum
+    * with anti-join dedupe (exact longs); backward = one join + agg per
+    * level ([[Superstep.iterate]]); edges persist once. Exactness: σ is
+    * all-integer; every δ and the final per-node sum aggregate
+    * decimal(28,18)-cast terms, so aggregation
     * order cannot perturb a double — the oracle's unrolled MATERIALIZED
     * CTE rounds hold bit-identical state. Report: top [[BC_TOP]] by
     * (rounded bc desc, node) — deterministic under ties. */
@@ -1187,38 +1041,25 @@ object BigGraphOps {
     val edges = persisted(coEdges(s, d).select(col("src"), col("dst")))
     val roots = edges.select(col("src")).distinct()
       .orderBy("src").limit(BC_ROOTS).select(col("src").as("root"))
-    var frontier = roots
-      .select(col("root"), col("root").as("node"), lit(1L).as("sigma"))
-      .localCheckpoint()
-    var levels = Vector(frontier)
-    var reached = frontier.select("root", "node")
-    for (_ <- 1 to BC_HOPS) {
-      frontier = frontier
-        .join(edges, col("node") === col("src"))
-        .select(col("root"), col("dst").as("node"), col("sigma"))
-        .join(reached, Seq("root", "node"), "left_anti")
-        .groupBy("root", "node").agg(sum(col("sigma")).as("sigma"))
-        .localCheckpoint()
-      reached = reached.unionByName(frontier.select("root", "node"))
-      levels = levels :+ frontier
-    }
-    // backward sweep: deltas(0) always holds level l+1's δ frame
-    var deltas = Vector(levels(BC_HOPS).withColumn("delta", lit(0.0)))
-    for (l <- (BC_HOPS - 1) to 1 by -1) {
-      val contrib = levels(l).as("v")
+    val levels = Superstep.frontiers(edges,
+      roots.select(col("root"), col("root").as("node"), lit(1L).as("sigma")), BC_HOPS)
+      .map(_.select("root", "node", "sigma"))
+    // backward sweep: round r turns level BC_HOPS-r+1's δ into level
+    // BC_HOPS-r's (levels 1..BC_HOPS-1; the roots' own δ is not summed)
+    val last = levels(BC_HOPS).withColumn("delta", lit(0.0))
+    val deltas = last +: Superstep.iterate(last, BC_HOPS - 1) { (w, r) =>
+      val v = levels(BC_HOPS - r)
+      val contrib = v.as("v")
         .join(edges, col("v.node") === col("src"))
-        .join(deltas.head.as("w"),
+        .join(w.as("w"),
           col("v.root") === col("w.root") && col("dst") === col("w.node"))
         .select(col("v.root").as("root"), col("v.node").as("node"),
           ((col("v.sigma") / col("w.sigma")) * (lit(1.0) + col("w.delta")))
             .cast("decimal(28,18)").as("t"))
         .groupBy("root", "node").agg(sum(col("t")).as("ts"))
-      val dl = levels(l)
-        .join(contrib, Seq("root", "node"), "left")
+      v.join(contrib, Seq("root", "node"), "left")
         .select(col("root"), col("node"), col("sigma"),
           coalesce(col("ts").cast("double"), lit(0.0)).as("delta"))
-        .localCheckpoint()
-      deltas = dl +: deltas
     }
     deltas.reduce(_ unionByName _)
       .groupBy("node")

@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Fns
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.graph.Superstep
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -110,29 +111,17 @@ object GraphOps {
 
   /** E6 — BFS: minimum hop count from SRC_NATION over the thinned directed
     * graph, bounded at MAX_HOPS. Iterative frontier expansion — each round
-    * is one hash join frontier⋈edges keyed on node id (Pregel superstep
-    * shape; swap for GraphX Pregel at cluster scale). */
+    * is one hash join frontier⋈edges keyed on node id
+    * ([[graft.graph.Superstep.frontiers]]). */
   val qBfs: Q = (s, d) => {
+    import s.implicits._
     // Persist the (tiny) edge relation: the frontier loop references it once
     // per hop and Spark would otherwise re-run the 4-table derivation each
     // round. Same pattern at scale — edges are the loop-invariant.
     val edges = topEdges(s, d).select(col("src"), col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var reached = s.range(1).select(
-      lit(SRC_NATION).cast("int").as("node"), lit(0).as("hop"))
-    for (h <- 1 to MAX_HOPS) {
-      val next = reached.filter(col("hop") === h - 1)
-        .join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), lit(h).as("hop"))
-        .join(reached.select("node"), Seq("node"), "left_anti")
-        .distinct()
-      // localCheckpoint truncates lineage: `reached` is referenced 3x per
-      // round, so an unbroken plan grows 3^h copies of the base tree and
-      // Catalyst analysis time explodes (measured seconds of driver time).
-      // At cluster scale this is a reliable checkpoint every k supersteps.
-      reached = reached.unionByName(next).localCheckpoint()
-    }
-    reached.groupBy(col("node")).agg(min(col("hop")).as("hops")).orderBy("node")
+    Superstep.reached(Superstep.frontiers(edges, Seq(SRC_NATION).toDF("node"), MAX_HOPS))
+      .select(col("node"), col("hop").as("hops")).orderBy("node")
   }
 
   /** E4 — min-cost path (the reference's `min()` walk query): bounded
@@ -144,16 +133,10 @@ object GraphOps {
   val qSssp: Q = (s, d) => {
     val edges = topEdges(s, d).select(col("src"), col("dst"), col("cost").as("ecost"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = s.range(1).select(
+    val init = s.range(1).select(
       lit(SRC_NATION).cast("int").as("node"), lit(0.0).as("cost"))
-    for (_ <- 1 to SSSP_ROUNDS) {
-      val relaxed = dist.join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), (col("cost") + col("ecost")).as("cost"))
-      dist = dist.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("cost")).as("cost"))
-        .localCheckpoint() // dist referenced 2x/round — see qBfs note
-    }
-    dist.select(col("node"), Fns.roundP(col("cost"), 8).as("cost")).orderBy("node")
+    Superstep.relax(edges, init, SSSP_ROUNDS, Superstep.minCost)
+      .select(col("node"), Fns.roundP(col("cost"), 8).as("cost")).orderBy("node")
   }
 
   /** E11 — PageRank, PR_ITERS synchronous iterations, damping 0.85, over
@@ -164,24 +147,28 @@ object GraphOps {
   val PR_ITERS = 5
   val qPagerank: Q = (s, d) => {
     val edges = topEdges(s, d).select(col("src"), col("dst"))
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = Tables.nation(s, d).select(col("n_nationkey").as("node"))
-    val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val n = 25.0
-    var rank = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-    for (_ <- 1 to PR_ITERS) {
-      val contrib = rank.join(edges, col("node") === col("src"))
-        .join(outDeg, "src")
-        .select(col("dst"), (col("rank") / col("deg")).as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c").cast("decimal(28,18)")).cast("double").as("in_sum"))
-      rank = nodes
-        .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(0.15 / n) + lit(0.85) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
+    val init = nodes.select(col("node"), lit(1.0 / n).as("rank"))
+    val rank = powerRanks(nodes, edges, init, PR_ITERS) { in =>
+      lit(0.15 / n) + lit(0.85) * in
     }
     rank.select(col("node"), Fns.roundP(col("rank"), 8).as("pagerank")).orderBy("node")
   }
+
+  /** `rounds` PageRank-family power iterations over out-degree-weighted
+    * edges (src, dst, deg): a node's next rank is `update` of the rank/deg
+    * its in-neighbors push ([[Superstep.pushSum]]), summed through exact
+    * decimals so the shuffle order can't perturb it. Shared with
+    * [[BigGraphOps]]' PageRank and personalized PageRank. */
+  private[operators] def powerRanks(nodes: DataFrame, edges: DataFrame, init: DataFrame,
+      rounds: Int)(update: Column => Column): DataFrame =
+    Superstep.iterate(init, rounds) { (rank, _) =>
+      Superstep.pushSum(nodes, rank, edges, (col("rank") / col("deg")).cast("decimal(28,18)"))
+        .select(col("node"), update(coalesce(col("in_sum").cast("double"), lit(0.0))).as("rank"))
+    }.last
 
   /** E11 — strongly connected components: scc_id(v) = min node m with
     * m⇄v mutually reachable. Reachability closure by ITERATIVE SQUARING

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.{Fns, GeoHash}
+import graft.graph.Superstep
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,26 +70,14 @@ object WalkOps {
     * explosion of a single 2k-hop BFS — the classic meet-in-the-middle
     * plan, each superstep one hash join. */
   val qBidirBfs: Q = (s, d) => {
+    import s.implicits._
     val edges = topEdges(s, d).select("src", "dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def bfs(start: Int, reversed: Boolean): DataFrame = {
-      val e = if (reversed) edges.select(col("dst").as("src"), col("src").as("dst")) else edges
-      var reached = Tables.nation(s, d).limit(1)
-        .select(lit(start).cast("int").as("node"), lit(0).as("hop"))
-      for (h <- 1 to BIDIR_HALF) {
-        val next = reached.filter(col("hop") === h - 1)
-          .join(e, col("node") === col("src"))
-          .select(col("dst").as("node"), lit(h).as("hop"))
-          .join(reached.select("node"), Seq("node"), "left_anti")
-          .distinct()
-        // lineage truncation — reached is referenced 3x per round (see
-        // GraphOps.qBfs note on exponential plan growth)
-        reached = reached.unionByName(next).localCheckpoint()
-      }
-      reached.groupBy("node").agg(min("hop").as("hop"))
-    }
-    val fwd = bfs(BIDIR_SRC, reversed = false).select(col("node"), col("hop").as("hf"))
-    val bwd = bfs(BIDIR_DST, reversed = true).select(col("node"), col("hop").as("hb"))
+    def bfs(start: Int, e: DataFrame): DataFrame =
+      Superstep.reached(Superstep.frontiers(e, Seq(start).toDF("node"), BIDIR_HALF))
+    val fwd = bfs(BIDIR_SRC, edges).select(col("node"), col("hop").as("hf"))
+    val bwd = bfs(BIDIR_DST, edges.select(col("dst").as("src"), col("src").as("dst")))
+      .select(col("node"), col("hop").as("hb"))
     fwd.join(bwd, "node")
       .agg(min(col("hf") + col("hb")).as("hops"))
   }

@@ -40,6 +40,8 @@ class WccSpec extends AnyFunSuite {
     val scc = BigGraphOps.qSccBig(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(wcc.keySet == scc.keySet && wcc.nonEmpty)
+    // q_scc_big is a real decomposition, not all singletons
+    assert(scc.values.toSet.size < scc.size)
     // nodes sharing an SCC must share a WCC
     val byScc = scc.groupBy(_._2).values
     assert(byScc.forall(m => m.keys.map(wcc).toSet.size == 1))

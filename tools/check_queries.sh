@@ -3,10 +3,12 @@
 # Usage: tools/check_queries.sh <sfDir> <q1,q2,...>
 # Runs graft.Verify with the name filter, prunes oracle_sql.json to the
 # subset (compare.py iterates the json), then compare.py.
-set -e
+set -eo pipefail
 SF="$1"; QS="$2"
 OUT=$(mktemp -d)
-sbt "runMain graft.Verify $SF $OUT $QS" >/dev/null 2>&1 || { echo "verify failed"; exit 1; }
+# keep Verify's per-gate "[verify] <name> failed: ..." lines; drop the rest
+sbt "runMain graft.Verify $SF $OUT $QS" 2>&1 | { grep -F '[verify]' || true; } ||
+  { echo "verify failed"; exit 1; }
 python3 - "$OUT" "$QS" <<'EOF'
 import json, sys
 out, qs = sys.argv[1], set(sys.argv[2].split(","))

@@ -58,9 +58,14 @@ def main():
     wd_lock = threading.Lock()
     stale_interrupt = False
     for name, sql in sorted(oracle.items()):
-        # filtered Verify run (dev iteration): skip BEFORE paying the
-        # oracle's execution cost, not after
-        if not os.path.isdir(f"{out_dir}/{name}"):
+        # Verify writes no directory for a gate that throws, so a missing
+        # output is that gate's failure (check_queries.sh prunes
+        # oracle_sql.json to the requested subset; nothing is skipped).
+        # Checked BEFORE paying the oracle's execution cost.
+        files = glob.glob(f"{out_dir}/{name}/*.parquet")
+        if not files:
+            print(f"FAIL {name}: no Spark output")
+            n_fail += 1
             continue
         want = None
         attempts = 0
@@ -112,11 +117,6 @@ def main():
         if want is None:
             continue
         dt = time.time() - tq
-        files = glob.glob(f"{out_dir}/{name}/*.parquet")
-        if not files:
-            print(f"FAIL {name}: no spark output")
-            n_fail += 1
-            continue
         got = canon(pd.concat([pd.read_parquet(f) for f in files], ignore_index=True))
         if list(got.columns) != list(want.columns):
             print(f"FAIL {name}: columns {list(got.columns)} != {list(want.columns)}")
