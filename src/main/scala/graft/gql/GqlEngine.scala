@@ -327,19 +327,21 @@ class GqlEngine(spark: SparkSession, root: String,
     val pred: Column = if (r.keys.nonEmpty) keysPred(r.keys) else predColumn(df, r.where.get)
     val removedKeys = df.filter(pred).select("key_i", "key_s")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    catalog.write(db, r.group, df.filter(!coalesce(pred, lit(false))), "vertex",
-      catalog.keyTypeOf(db, r.group))
-    // S5 cascade: incident edges die with the vertex (RemovePlan.cpp:9-21)
-    catalog.edgeGroups(db).foreach { eg =>
-      val edges = catalog.read(db, eg)
-      val hitSrc = edges.join(broadcast(removedKeys),
-        edges("src_i") <=> removedKeys("key_i") && edges("src_s") <=> removedKeys("key_s"),
-        "left_anti")
-      val survivors = hitSrc.join(broadcast(removedKeys),
-        hitSrc("dst_i") <=> removedKeys("key_i") && hitSrc("dst_s") <=> removedKeys("key_s"),
-        "left_anti")
-      catalog.write(db, eg, survivors, "edge", "")
-    }
+    try {
+      catalog.write(db, r.group, df.filter(!coalesce(pred, lit(false))), "vertex",
+        catalog.keyTypeOf(db, r.group))
+      // S5 cascade: incident edges die with the vertex (RemovePlan.cpp:9-21)
+      catalog.edgeGroups(db).foreach { eg =>
+        val edges = catalog.read(db, eg)
+        val hitSrc = edges.join(broadcast(removedKeys),
+          edges("src_i") <=> removedKeys("key_i") && edges("src_s") <=> removedKeys("key_s"),
+          "left_anti")
+        val survivors = hitSrc.join(broadcast(removedKeys),
+          hitSrc("dst_i") <=> removedKeys("key_i") && hitSrc("dst_s") <=> removedKeys("key_s"),
+          "left_anti")
+        catalog.write(db, eg, survivors, "edge", "")
+      }
+    } finally removedKeys.unpersist()
   }
 
   /** Remove keys match either key column: a numeric text key matches the
@@ -830,18 +832,17 @@ class GqlEngine(spark: SparkSession, root: String,
     * expanded to `hops` orders (frontier join per hop, origin and already-
     * reached nodes excluded). */
   private def neighborQuery(edges: DataFrame, n: Neighbor): DataFrame = {
+    // an endpoint's node id: the string key, or the int key as text
+    def node(i: String, s: String): Column = coalesce(col(s), col(i).cast("string"))
     // normalized (src -> dst) relation honoring the pattern direction
-    val fwd = edges.select(col("src_i"), col("src_s"), col("dst_i"), col("dst_s"), col("directed"))
-    def norm(df: DataFrame) = df
-      .select(coalesce(col("src_s"), col("src_i").cast("string")).as("src"),
-        coalesce(col("dst_s"), col("dst_i").cast("string")).as("dst"))
+    val fwd = edges.select(node("src_i", "src_s").as("src"), node("dst_i", "dst_s").as("dst"),
+      col("directed"))
     val rel = (n.dir match {
-      case "->" => norm(fwd.filter(col("directed")))
-      case "<-" => norm(fwd.filter(col("directed"))).select(
-        col("dst").as("src"), col("src").as("dst"))
-      case _ => norm(fwd).unionByName(
-        norm(fwd).select(col("dst").as("src"), col("src").as("dst")))
-    }).filter(col("dst").isNotNull).localCheckpoint()
+      case "->" => fwd.filter(col("directed")).select("src", "dst")
+      case "<-" => fwd.filter(col("directed")).select(col("dst").as("src"), col("src").as("dst"))
+      case _ => fwd.select("src", "dst").unionByName(
+        fwd.select(col("dst").as("src"), col("src").as("dst")))
+    }).filter(col("dst").isNotNull)
     val origin = n.key match {
       case GInt(l) => l.toString
       case GStr(s) => s
@@ -851,16 +852,15 @@ class GqlEngine(spark: SparkSession, root: String,
     import spark.implicits._
     val reached = Superstep.reached(
       Superstep.frontiers(rel, Seq(origin).toDF("node"), math.max(1, n.hops)))
-    // neighbors keep the original twin-column shape for downstream callers
-    val keys = edges
-      .select(coalesce(col("src_s"), col("src_i").cast("string")).as("node"),
-        col("src_i").as("neighbor_i"), col("src_s").as("neighbor_s"))
-      .unionByName(edges.select(
-        coalesce(col("dst_s"), col("dst_i").cast("string")).as("node"),
-        col("dst_i").as("neighbor_i"), col("dst_s").as("neighbor_s")))
-      .distinct()
-    reached.filter(col("node") =!= origin)
-      .join(keys, "node")
+      .filter(col("node") =!= origin).select("node")
+    // neighbors keep the original twin-column shape for downstream callers:
+    // every endpoint whose node id was reached (an int key and its digit-
+    // string twin are both neighbors), matched against the broadcast
+    // reached set, so only the few matches reach the distinct
+    def ends(i: String, s: String) =
+      edges.select(node(i, s).as("node"), col(i).as("neighbor_i"), col(s).as("neighbor_s"))
+    ends("src_i", "src_s").unionByName(ends("dst_i", "dst_s"))
+      .join(broadcast(reached), "node")
       .select("neighbor_i", "neighbor_s")
       .distinct()
   }

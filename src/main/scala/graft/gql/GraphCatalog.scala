@@ -1,6 +1,8 @@
 package graft.gql
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -20,6 +22,20 @@ import Ast._
   * version are never disturbed, and at cluster scale the rewrite is an
   * embarrassingly parallel partitioned write, not an in-place edit.
   *
+  * Version directories are write-once: [[write]] always creates `v(N+1)`
+  * and only then publishes the meta file that points at it, and nothing
+  * ever rewrites a published version in place. A directory that is
+  * re-created under the same name (drop then create, or another engine
+  * on the same root) is a new directory with a new identity (file key
+  * plus modification time). [[read]] relies on this: each version is
+  * resolved once — file listing and schema — and the same relation is
+  * served while meta still points at that directory and its identity
+  * holds.
+  *
+  * The meta file is replaced atomically (temp file + rename), so a reader
+  * sees the old or the new meta, never a half-written one, and a crash
+  * mid-write leaves the previous meta in place.
+  *
   * Dual key types (reference StorageEngine.cpp:338-342): vertices carry
   * `key_i`/`key_s` twin columns; the group's key type is fixed by first
   * write and a mismatched upsert fails the statement
@@ -27,6 +43,9 @@ import Ast._
   */
 class GraphCatalog(spark: SparkSession, val root: String) {
   import GraphCatalog._
+
+  /** The resolved relation of each group's current version, by (db, group). */
+  private val resolved = new ConcurrentHashMap[(String, String), Resolved]()
 
   private def dbPath(db: String): Path = Paths.get(root, db)
   private def metaPath(db: String): Path = dbPath(db).resolve("meta")
@@ -58,6 +77,7 @@ class GraphCatalog(spark: SparkSession, val root: String) {
       Files.deleteIfExists(p)
     }
     if (Files.exists(dbPath(db))) rm(dbPath(db))
+    resolved.keySet.removeIf(_._1 == db)
   }
 
   def listGraphs(): Seq[String] =
@@ -84,12 +104,18 @@ class GraphCatalog(spark: SparkSession, val root: String) {
 
   /** Current DataFrame of a group; empty (correct schema) if never written.
     * A group declared by bare name has kind `unknown` until first upsert —
-    * `kindHint` tells an upsert path which empty schema to synthesize. */
+    * `kindHint` tells an upsert path which empty schema to synthesize.
+    *
+    * A version is resolved (files listed, schema known) once: by the
+    * [[write]] that created it, or else by its first read, which infers
+    * the schema in a Spark job. Later reads of the same version directory
+    * return the same DataFrame. It holds no rows, so caching is unchanged. */
   def read(db: String, group: String, kindHint: String = ""): DataFrame = {
     val meta = readMeta(db)
     meta.groups.get(group) match {
       case Some(g) if g.version > 0 =>
-        spark.read.parquet(dataDir(db, group, g.version).toString)
+        val dir = dataDir(db, group, g.version)
+        resolve(db, group, dir)(spark.read.parquet(dir.toString))
       case Some(g) =>
         val kind = if (g.kind != "unknown") g.kind else if (kindHint.nonEmpty) kindHint else "vertex"
         val schema = if (kind == "edge") edgeBaseSchema else vertexBaseSchema
@@ -102,18 +128,36 @@ class GraphCatalog(spark: SparkSession, val root: String) {
   private def dataDir(db: String, group: String, v: Int): Path =
     dbPath(db).resolve(group).resolve(s"v$v")
 
+  /** The memoized relation of `dir` if it is still the directory the memo
+    * resolved, else `load`, remembered for the next read. */
+  private def resolve(db: String, group: String, dir: Path)(load: => DataFrame): DataFrame = {
+    val a = Files.readAttributes(dir, classOf[BasicFileAttributes])
+    val id = (a.fileKey, a.lastModifiedTime)
+    val hit = resolved.get((db, group))
+    if (hit != null && hit.dir == dir && hit.id == id) hit.df
+    else {
+      val df = load
+      resolved.put((db, group), Resolved(dir, id, df))
+      df
+    }
+  }
+
   /** Replace a group's contents with `df` (written as the next version,
     * pointer flipped in meta). */
   def write(db: String, group: String, df: DataFrame, kind: String, keyType: String): Unit = {
     val meta = readMeta(db)
     val g = meta.groups.getOrElse(group, GroupMeta(group))
     val next = g.version + 1
-    df.write.mode("overwrite").parquet(dataDir(db, group, next).toString)
+    val dir = dataDir(db, group, next)
+    df.write.mode("overwrite").parquet(dir.toString)
     meta.groups(group) = g.copy(
       version = next,
       kind = if (g.kind == "unknown") kind else g.kind,
       keyType = if (g.keyType.isEmpty) keyType else g.keyType)
     writeMeta(meta)
+    // the schema just written is the schema Parquet inference would find
+    // (both read as nullable), so the new version resolves without its job
+    resolve(db, group, dir)(spark.read.schema(df.schema).parquet(dir.toString))
   }
 
   def keyTypeOf(db: String, group: String): String =
@@ -157,6 +201,7 @@ class GraphCatalog(spark: SparkSession, val root: String) {
     val targets =
       if (group.nonEmpty) meta.groups.get(group).toSeq else meta.groups.values.toSeq
     for (g <- targets) {
+      resolved.remove((db, g.name))
       val gdir = dbPath(db).resolve(g.name)
       if (Files.isDirectory(gdir)) {
         val cur = s"v${g.version}"
@@ -195,7 +240,13 @@ class GraphCatalog(spark: SparkSession, val root: String) {
         Seq("grp", g.name, g.kind, g.keyType, g.version.toString,
           g.declaredProps.mkString(","), g.index.mkString(","), g.from, g.to).mkString("|")
       }
-    Files.write(metaPath(meta.name), lines.asJava)
+    // the leading dot keeps the temp file out of the group namespace
+    val tmp = dbPath(meta.name).resolve(s".meta.${java.util.UUID.randomUUID}.tmp")
+    try {
+      Files.write(tmp, lines.asJava)
+      Files.move(tmp, metaPath(meta.name),
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 
   private def readMeta(db: String): Meta = {
@@ -229,6 +280,9 @@ object GraphCatalog {
     declaredProps: Seq[String] = Nil,
     index: Seq[String] = Nil,
     from: String = "", to: String = "")
+
+  /** A resolved version directory: its path, identity and relation. */
+  private case class Resolved(dir: Path, id: (AnyRef, AnyRef), df: DataFrame)
 
   case class Meta(name: String) {
     val groups = scala.collection.mutable.LinkedHashMap[String, GroupMeta]()

@@ -1,6 +1,12 @@
 package graft
 
-import graft.gql.{GqlEngine, Parser}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import scala.jdk.CollectionConverters._
+
+import graft.gql.{Ast, GqlEngine, Parser}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end GQL engine tests mirroring the reference's grammar suite
@@ -106,7 +112,10 @@ class GqlSpec extends AnyFunSuite {
     e.exec("{upset: 'g', vertex: [['a'], ['b'], ['c']]};")
     e.exec("{upset: 'e', edge: [['a', ->, 'b'], ['b', ->, 'c'], ['a', --, 'c']]};")
     assert(count(e, "{query: 'e', in: 'ga'};") == 3)
+    val cached = spark.sparkContext.getPersistentRDDs.size
     e.exec("{remove: 'g', vertex: ['a']};")
+    // the removed-key set the cascade broadcasts is released again
+    assert(spark.sparkContext.getPersistentRDDs.size <= cached)
     assert(count(e, "{query: 'g', in: 'ga'};") == 2)
     // both edges touching 'a' are gone
     assert(count(e, "{query: 'e', in: 'ga'};") == 1)
@@ -567,5 +576,165 @@ class GqlSpec extends AnyFunSuite {
     assert(got == Set(Seq("5", "1", "2")))
     val ast = e.exec("ast {query: 'knows', in: 'mg', where: [[a,->,b],[b,->,c]]};").head
     assert(ast.text.get.contains("Motif") && ast.text.get.contains("MVar"))
+  }
+
+  /** Spark jobs the calling thread launches inside `body`. Listener events
+    * arrive in order, so once a marker job launched afterwards has been
+    * seen, every job of `body` has been counted. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val jobs = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == group) jobs.incrementAndGet()
+          else if (g == marker) markerSeen.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def keys(e: GqlEngine, db: String, g: String): Set[Long] =
+    e.query(s"{query: '$g', in: '$db'};").select("key_i").collect().map(_.getLong(0)).toSet
+
+  test("catalog.read resolves each version once: repeated reads run no Spark job") {
+    val e = freshEngine()
+    e.exec("{create: 'rm', group: ['g', 'e']};")
+    e.exec("{upset: 'g', vertex: [[1, {a: 1, b: 'x', c: 1.5, d: [1.0, 2.0], t: ['p'], dt: 0d12345}], [2]]};")
+    e.exec("{upset: 'e', edge: [[1, ->: {w: 2.5, tag: 'k'}, 2], ['u', --, 'v']]};")
+    // the writer resolves the version it wrote from the schema it wrote
+    assert(jobsIn(e.catalog.read("rm", "g")) == 0)
+    // another engine on the same root infers it on its first read only
+    val other = new GqlEngine(spark, e.catalog.root)
+    assert(jobsIn(other.catalog.read("rm", "g")) >= 1)
+    assert(jobsIn(other.catalog.read("rm", "g")) == 0)
+    // and both see the same relation
+    Seq("g", "e").foreach(g => assert(e.catalog.read("rm", g).schema == other.catalog.read("rm", g).schema))
+    e.exec("{upset: 'g', vertex: [[3, {a: 3}]]};")
+    assert(jobsIn(e.catalog.read("rm", "g")) == 0)
+    assert(jobsIn(other.catalog.read("rm", "g")) >= 1)
+    assert(e.catalog.read("rm", "g").schema == other.catalog.read("rm", "g").schema)
+    assert(keys(other, "rm", "g") == Set(1L, 2L, 3L))
+  }
+
+  test("read memo: drop, re-create and re-populate a group returns the new rows") {
+    val e = freshEngine()
+    e.exec("{create: 'rm', group: ['g']};")
+    e.exec("{upset: 'g', vertex: [[1, {a: 1}], [2, {a: 2}]]};")
+    assert(keys(e, "rm", "g") == Set(1L, 2L))
+    e.exec("{drop: 'rm'};")
+    e.exec("{create: 'rm', group: ['g']};")
+    // the same version number, v1, now with different rows
+    e.exec("{upset: 'g', vertex: [[7, {a: 7}]]};")
+    assert(keys(e, "rm", "g") == Set(7L))
+  }
+
+  test("read memo: another engine's writes on the same root are seen") {
+    val a = freshEngine()
+    a.exec("{create: 'rm', group: ['g']};")
+    a.exec("{upset: 'g', vertex: [[1, {a: 1}]]};")
+    assert(keys(a, "rm", "g") == Set(1L))
+    val b = new GqlEngine(spark, a.catalog.root)
+    b.exec("{upset: 'g', vertex: [[2, {a: 2}]]};")
+    assert(keys(a, "rm", "g") == Set(1L, 2L), "a new version written by another engine")
+    // another engine re-creates the graph: v2, the version this engine
+    // resolved last, is a new directory at the same path
+    b.exec("{drop: 'rm'};")
+    b.exec("{create: 'rm', group: ['g']};")
+    b.exec("{upset: 'g', vertex: [[9, {a: 9}]]};")
+    b.exec("{upset: 'g', vertex: [[10, {a: 10}]]};")
+    assert(a.catalog.versionOf("rm", "g") == 2)
+    assert(keys(a, "rm", "g") == Set(9L, 10L), "a re-created version directory of another engine")
+  }
+
+  test("read memo: a read after vacuum returns the current rows") {
+    val e = freshEngine()
+    e.exec("{create: 'rm', group: ['g']};")
+    e.exec("{upset: 'g', vertex: [[1, {a: 1}], [2, {a: 2}]]};")
+    e.exec("{upset: 'g', vertex: [[3, {a: 3}]]};")
+    assert(keys(e, "rm", "g") == Set(1L, 2L, 3L))
+    e.exec("{remove: 'g', vertex: [1]};")
+    assert(keys(e, "rm", "g") == Set(2L, 3L))
+    e.catalog.vacuum("rm")
+    assert(keys(e, "rm", "g") == Set(2L, 3L))
+    e.exec("{upset: 'g', vertex: [[4, {a: 4}]]};")
+    e.catalog.vacuum("rm", "g")
+    assert(keys(e, "rm", "g") == Set(2L, 3L, 4L))
+  }
+
+  test("meta is published atomically: a concurrent reader never sees a declared group go missing") {
+    val e = freshEngine()
+    val cat = e.catalog
+    cat.create("cm", Seq(Ast.VertexGroup("g0", Nil, Nil), Ast.VertexGroup("g1", Nil, Nil)), Nil)
+    val stop = new AtomicBoolean(false)
+    val errors = new ConcurrentLinkedQueue[String]()
+    val reads = new AtomicInteger
+    val reader = new Thread(() => {
+      var declared = Set("g0", "g1")
+      var version = 0
+      while (!stop.get) {
+        try {
+          val gs = cat.groups("cm").toSet
+          if (!declared.subsetOf(gs)) errors.add(s"declared groups missing: ${declared -- gs}")
+          declared = declared ++ gs
+          val v = cat.versionOf("cm", "g0")
+          if (v < version) errors.add(s"version went back from $version to $v")
+          version = math.max(version, v)
+        } catch { case t: Throwable => errors.add(t.toString) }
+        reads.incrementAndGet()
+      }
+    })
+    reader.start()
+    try {
+      (1 to 300).foreach { i =>
+        cat.create("cm", Seq(Ast.VertexGroup(s"n$i", Nil, Nil)), Nil)
+        if (i % 50 == 0)
+          cat.write("cm", "g0", spark.range(i).select(col("id").as("key_i"),
+            lit(null).cast("string").as("key_s")), "vertex", "int")
+      }
+    } finally {
+      stop.set(true)
+      reader.join()
+    }
+    assert(errors.isEmpty, errors.asScala.take(3).mkString("; "))
+    assert(reads.get > 0)
+    assert(cat.groups("cm").size == 302)
+    assert(cat.versionOf("cm", "g0") == 6)
+    // the temp files of the publish protocol are neither graphs nor left behind
+    assert(cat.listGraphs() == Seq("cm"))
+    val st = java.nio.file.Files.list(java.nio.file.Paths.get(cat.root, "cm"))
+    try assert(!st.iterator().asScala.exists(_.getFileName.toString.endsWith(".tmp")))
+    finally st.close()
+  }
+
+  test("neighbor maps reached nodes back to both twin keys, per direction and hop count") {
+    val e = freshEngine()
+    e.exec("{create: 'tw', group: ['e']};")
+    // int 1 and the digit string '1' are one node; so are 2 and '2'
+    e.exec("""{upset: 'e', edge: [[1, ->, 2], ['1', ->, 'a'], ['a', ->, 3], [2, --, 'b'],
+             |  ['c', ->, 1], [4, ->, '1'], ['a', ->, '2'], ['d', ->, 'c']]};""".stripMargin)
+    def nb(dir: String, hops: Int): Set[(Option[Long], Option[String])] =
+      e.query(s"{query: 'e', in: 'tw', where: {id: 1, $dir: *, neighbor: $hops}};")
+        .collect().map(r => (Option(r.getAs[java.lang.Long]("neighbor_i")).map(_.longValue),
+          Option(r.getAs[String]("neighbor_s")))).toSet
+    def i(k: Long): (Option[Long], Option[String]) = (Some(k), None)
+    def s(k: String): (Option[Long], Option[String]) = (None, Some(k))
+    assert(nb("->", 1) == Set(i(2), s("2"), s("a")))
+    assert(nb("->", 2) == Set(i(2), s("2"), s("a"), i(3)))
+    assert(nb("<-", 1) == Set(s("c"), i(4)))
+    assert(nb("<-", 2) == Set(s("c"), i(4), s("d")))
+    assert(nb("--", 1) == Set(i(2), s("2"), s("a"), s("c"), i(4)))
+    assert(nb("--", 2) == Set(i(2), s("2"), s("a"), s("c"), i(4), s("b"), i(3), s("d")))
   }
 }
